@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions.udf
 
 /** Column-level bindings for the geo/criterion kernel.
@@ -36,10 +37,13 @@ object Kernel {
   def geohash_enc(lat: Column, lon: Column, len: Column): Column =
     geohashUdf(lat, lon, len)
 
-  /** Also register for SQL use. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("chord_distance", chordDistanceUdf)
-    spark.udf.register("score_geo", scoreGeoUdf)
-    spark.udf.register("geohash_enc", geohashUdf)
-  }
+  /** Also register for SQL use (each name once: replacing a registered
+    * function logs a WARN line). */
+  def register(spark: SparkSession): Unit =
+    for ((name, f) <- Seq("chord_distance" -> chordDistanceUdf,
+                          "score_geo" -> scoreGeoUdf,
+                          "geohash_enc" -> geohashUdf)
+         if !spark.sessionState.functionRegistry
+           .functionExists(FunctionIdentifier(name)))
+      spark.udf.register(name, f)
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -193,8 +194,12 @@ object ParseHitPayload {
     if (neg) -v else v
   }
 
-  /** Register `parse_hit_payload` for SQL/selectExpr use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_hit_payload", exprs => ParseHitPayload(exprs.head), "built-in")
+  /** Register `parse_hit_payload` for SQL/selectExpr use (once:
+    * replacing a registered function logs a WARN line). */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(FunctionIdentifier("parse_hit_payload")))
+      reg.createOrReplaceTempFunction(
+        "parse_hit_payload", exprs => ParseHitPayload(exprs.head), "built-in")
+  }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -61,8 +62,12 @@ object PolyHash {
     acc
   }
 
-  /** Register `poly_hash` for SQL/selectExpr use in this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "built-in")
+  /** Register `poly_hash` for SQL/selectExpr use in this session (once:
+    * replacing a registered function logs a WARN line). */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    if (!reg.functionExists(FunctionIdentifier("poly_hash")))
+      reg.createOrReplaceTempFunction(
+        "poly_hash", exprs => PolyHash(exprs.head), "built-in")
+  }
 }

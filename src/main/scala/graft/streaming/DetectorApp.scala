@@ -191,11 +191,22 @@ object DetectorApp {
 
   /** The standing application: file-source wire lines in, the two
     * formatted sink directories out (foreachBatch multicast — the
-    * reference's sink::collection fan-out, O1). */
+    * reference's sink::collection fan-out, O1).
+    *
+    * Sets `spark.sql.streaming.checkpointFileManagerClass` on the
+    * caller's session to Spark's FileSystem-based checkpoint manager.
+    * Spark's default commits every state delta and offset/commit log
+    * file through Hadoop's FileContext, whose local filesystem, without
+    * the native Hadoop library, forks `chmod`/`stat` processes about 20
+    * times per file; the FileSystem manager writes the same files with a
+    * rename and a fraction of the forks. */
   def run(spark: SparkSession, inDir: String, outDir: String,
           checkpointDir: String,
           trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
       : StreamingQuery = {
+    spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+      "org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager")
     val lines = spark.readStream
       .schema("topic STRING, payload STRING")
       .json(inDir)

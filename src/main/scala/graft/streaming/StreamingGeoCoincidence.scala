@@ -3,6 +3,8 @@ package graft.streaming
 import graft.{Detector, Geodesic}
 import graft.functions.Geo
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.catalyst.util.IntervalUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -48,6 +50,11 @@ case class EmittedGeoCluster(clusterStart: Long, clusterEnd: Long, n: Long,
   *     chord-distance/ToF criterion (positions derived from the station
   *     key) — `addEvent` mirrors the reference's next_match loop
   *     including the transitive bridge-merge.
+  *
+  * Sealing is eager, like the reference's constructor timeout: a session
+  * seals in the micro-batch whose hits close it, not one batch later when
+  * the event-time watermark catches up. The watermark delay is the
+  * lateness bound for each bucket's newest held hit (see [[clusterStream]]).
   *
   * Sealed output equals the batch `coincidence_geo` components exactly
   * (GeoStreamingSpec proves it on the sf0.001 corpus); clusters split by
@@ -157,9 +164,18 @@ object StreamingGeoCoincidence {
         c.members.size > nSt, c.members.sortBy(_.eventId))
     }
 
-  /** The streaming query: keyed by time bucket, sessions seal when the
-    * event-time watermark passes maxStart + timeout, each sealed session
-    * emitting its criterion components. */
+  /** The streaming query: keyed by time bucket, each sealed session
+    * emitting its criterion components.
+    *
+    * With `horizon` = max(watermark, newest hit held for the bucket −
+    * `watermarkDelay`), a session seals once maxStart + timeout < horizon,
+    * in the batch that folds the hit moving the horizon past it. A hit
+    * more than `watermarkDelay` behind the bucket's newest held hit (as
+    * held before its batch's fold) is dropped as late: it could touch a
+    * session already emitted. Spark applies the same rule one batch later
+    * (it filters late rows against the previous batch's watermark), so
+    * for hits no later than the delay the clusters equal the
+    * watermark-only sealing and only the emitting batch moves. */
   def clusterStream(hits: Dataset[StreamHit],
                     gapNs: Long = Detector.GapNs,
                     bucketNs: Long = Detector.BucketNs,
@@ -170,6 +186,9 @@ object StreamingGeoCoincidence {
       : Dataset[EmittedGeoCluster] = {
     val spark = hits.sparkSession
     import spark.implicits._
+    // the delay exactly as withWatermark parses it
+    val delayNs = EventTimeWatermark.getDelayMs(
+      IntervalUtils.fromIntervalString(watermarkDelay)) * 1000000L
     hits
       .withColumn("ts", timestamp_micros(expr("startNs div 1000")))
       .withWatermark("ts", watermarkDelay)
@@ -177,10 +196,10 @@ object StreamingGeoCoincidence {
       .groupByKey { case (_, _, startNs, _) => startNs / bucketNs }
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(
-        processBucket(gapNs, speedMPerNs, minTofNs, maxTimeNs))
+        processBucket(gapNs, delayNs, speedMPerNs, minTofNs, maxTimeNs))
   }
 
-  private def processBucket(gapNs: Long, speedMPerNs: Double,
+  private def processBucket(gapNs: Long, delayNs: Long, speedMPerNs: Double,
                             minTofNs: Double, maxTimeNs: Long)(
       key: Long,
       events: Iterator[(Long, Long, Long, java.sql.Timestamp)],
@@ -188,13 +207,18 @@ object StreamingGeoCoincidence {
     val crit = (a: GeoMember, b: GeoMember) =>
       validEdge(a, b, speedMPerNs, minTofNs, maxTimeNs)
     val wmNs = state.getCurrentWatermarkMs() * 1000000L
+    // newest held hit − delay; no hit held ⇒ no bound
+    def horizon(ss: List[OpenGeoSession]): Long =
+      ss.iterator.map(_.maxStart).maxOption.fold(Long.MinValue)(_ - delayNs)
     var sessions = state.getOption.map(_.sessions).getOrElse(Nil)
+    val lateNs = horizon(sessions)
 
     if (!state.hasTimedOut)
-      for ((eid, st, startNs, _) <- events)
+      for ((eid, st, startNs, _) <- events if startNs >= lateNs)
         sessions = addEvent(sessions, StreamHit(eid, st, startNs), gapNs, crit)
 
-    val (closed, open) = sessions.partition(s => s.maxStart + s.timeoutNs < wmNs)
+    val sealNs = math.max(wmNs, horizon(sessions))
+    val (closed, open) = sessions.partition(s => s.maxStart + s.timeoutNs < sealNs)
     if (open.isEmpty) state.remove()
     else {
       state.update(GeoBucketState(open))

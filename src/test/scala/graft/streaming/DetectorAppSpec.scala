@@ -141,4 +141,59 @@ class DetectorAppSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, not}
     assert(mqtt.filter(not(col("msg").contains(sentinelHex))).count() == 0)
   }
+
+  test("standing application: a restart on its checkpoint changes no sink row") {
+    import spark.implicits._
+    val S = 1000000000L
+    // a gate-passing wire line (time_acc 10, fix 1) for `station` at `tNs`
+    def line(station: Long, ublox: Int, tNs: Long): (String, String) = {
+      val f = "%d.%09d".format(tNs / S, tNs % S)
+      (s"muonpi/data/u$station/st0", s"$f $f 10 $ublox 1 1 1")
+    }
+    // stations 1 and 2 are one grid step apart (ToF ≈ 22 s at the scaled
+    // speed): six lines each complete their detinfo masks, then 40
+    // two-station clusters, 3 s apart within a pair and 500 s between pairs
+    val t0 = 1700000000L * S
+    val warm = for (st <- 1L to 2L; k <- 0 until 6) yield {
+      val t = t0 + (k * 100 + st * 50) * S
+      (t, line(st, k, t))
+    }
+    val pairs = for (c <- 0 until 40; st <- 1L to 2L) yield {
+      val t = t0 + (10000L + c * 500L + (st - 1) * 3) * S
+      (t, line(st, 6 + c, t))
+    }
+    // stop between the two hits of cluster 20, so its session is open
+    // in the checkpoint across the restart
+    val cut = t0 + (10000L + 20 * 500L + 1) * S
+    val (before, after) = (warm ++ pairs).partition(_._1 < cut)
+    val maxSec = 4000000000L
+    val flush = (0 until 6).map(k => sentinelLine(k, maxSec + k * 100)) ++
+      Seq(sentinelLine(0, maxSec + 1000000L), sentinelLine(1, maxSec + 2000000L))
+
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def feed(in: String, ls: Seq[(String, String)]): Unit =
+      ls.toDF("topic", "payload").write.mode("append").json(in)
+    def runOnce(in: String, out: String, ckpt: String): Unit = {
+      val q = DetectorApp.run(spark, in, out, ckpt,
+        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      assert(q.awaitTermination(120000))
+    }
+    def sinkRows(out: String) = Seq("mqtt", "ascii").map(sink =>
+      spark.read.schema("uuid BIGINT, msg STRING").parquet(s"$out/$sink")
+        .as[(Long, String)].collect().toSeq.sorted)
+
+    val (in1, out1, ck1) = (tmp("detapp_in"), tmp("detapp_out"), tmp("detapp_ck"))
+    feed(in1, (before ++ after).map(_._2) ++ flush)
+    runOnce(in1, out1, ck1)
+
+    val (in2, out2, ck2) = (tmp("detapp_in"), tmp("detapp_out"), tmp("detapp_ck"))
+    feed(in2, before.map(_._2))
+    runOnce(in2, out2, ck2) // stops by itself once the first part is done
+    feed(in2, after.map(_._2) ++ flush)
+    runOnce(in2, out2, ck2)
+
+    val want = sinkRows(out1)
+    assert(want.map(_.size) == Seq(80, 40)) // every pair, incl. cluster 20
+    assert(sinkRows(out2) == want)
+  }
 }

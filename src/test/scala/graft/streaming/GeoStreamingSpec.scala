@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.ConcurrentLinkedQueue
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Stream/batch parity for the GEODESIC coincidence family: the streaming
   * clusterer applies the C1 chord-distance/ToF criterion online (the
@@ -165,6 +168,72 @@ class GeoStreamingSpec extends AnyFunSuite {
       assert(got.map(c => (c.n, c.members.map(_.eventId).sorted)).toSeq ==
         Seq((3L, List(1L, 2L, 3L))))
     } finally q2.stop()
+  }
+
+  /** One-bucket clusterStream with a 10 s delay on `s`, every emitted
+    * cluster recorded with the id of the micro-batch that emitted it. */
+  private def startDelayed(s: SparkSession, mem: MemoryStream[StreamHit],
+                           seen: ConcurrentLinkedQueue[(Long, EmittedGeoCluster)])
+      : StreamingQuery =
+    StreamingGeoCoincidence.clusterStream(mem.toDS(), gapNs = gap,
+        bucketNs = Long.MaxValue / 4, watermarkDelay = "10 seconds")
+      .writeStream.outputMode("append")
+      .foreachBatch { (batch: Dataset[EmittedGeoCluster], id: Long) =>
+        batch.collect().foreach(c => seen.add((id, c)))
+      }
+      .start()
+
+  test("eager seal: a session closed by a later hit emits in that hit's batch") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamHit]
+    val seen = new ConcurrentLinkedQueue[(Long, EmittedGeoCluster)]()
+    val q = startDelayed(spark, mem, seen)
+    try {
+      mem.addData(StreamHit(1, 0, B), StreamHit(2, 1, B + 10 * S))
+      q.processAllAvailable()
+      assert(seen.isEmpty)
+      // same bucket, 190 s later: newest − delay passes the session's
+      // deadline (maxStart + 30 s gap)
+      mem.addData(StreamHit(3, 999, B + 200 * S))
+      q.processAllAvailable()
+      val t0 = System.nanoTime()
+      def hitBatch = q.recentProgress.find(_.numInputRows == 1).map(_.batchId)
+      while (hitBatch.isEmpty && System.nanoTime() - t0 < 10 * S) Thread.sleep(20)
+      // watermark-only sealing emits the same members, but only from the
+      // next batch, once the watermark has caught up with hit 3
+      assert(seen.asScala.toSeq.map { case (id, c) =>
+        (id, c.members.map(_.eventId)) } == Seq((hitBatch.get, List(1L, 2L))))
+    } finally q.stop()
+  }
+
+  test("late hit: more than the delay behind the bucket's newest is dropped") {
+    // no no-data batches: each addData is one batch, so Spark's own late
+    // filter still holds the previous batch's low watermark
+    val s = spark.newSession()
+    s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    import s.implicits._
+    implicit val sqlCtx = s.sqlContext
+    val mem = MemoryStream[StreamHit]
+    val seen = new ConcurrentLinkedQueue[(Long, EmittedGeoCluster)]()
+    val q = startDelayed(s, mem, seen)
+    try {
+      mem.addData(StreamHit(1, 0, B), StreamHit(2, 1, B + 10 * S))
+      q.processAllAvailable()
+      mem.addData(StreamHit(-1L, 999L, B + 200 * S)) // seals {1, 2}
+      q.processAllAvailable()
+      // criterion-valid to 1 and inside {1, 2}'s gap, but 185 s behind
+      // the bucket's newest hit: it must not reopen or fragment {1, 2}
+      mem.addData(StreamHit(3, 1, B + 15 * S))
+      q.processAllAvailable()
+      mem.addData(StreamHit(-2L, 999L, B + 100000 * S))
+      q.processAllAvailable()
+      mem.addData(StreamHit(-3L, 999L, B + 200000 * S))
+      q.processAllAvailable()
+      val got = seen.asScala.toSeq.map(_._2)
+        .filter(c => !c.members.exists(_.station == 999L))
+      assert(got.map(_.members.map(_.eventId)) == Seq(List(1L, 2L)))
+    } finally q.stop()
   }
 
   test("bucket-boundary compaction restores batch geodesic components") {
